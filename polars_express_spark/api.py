@@ -7,16 +7,21 @@ Reference routes (src/main.rs:309-319):
 
 These are transport-agnostic functions (the HTTP layer is trivial and
 orthogonal); error semantics mirror the reference's 400 responses as
-typed exceptions. Each call is a stateless, request-scoped computation
-against the shared session, exactly like the reference's AppState model
-(src/main.rs:60-73) — but loads are lazy scans, not eager whole-file
-parses.
+typed exceptions. Each call is a request-scoped computation against the
+shared session, like the reference's AppState model (src/main.rs:60-73),
+but where the reference re-parses the whole file per request, the scan
+comes from DataLake.load's cache: one lazy scan per (path, schema,
+merge_schema), reused while the path's filesystem stamp is unchanged and
+dropped on every write through the lake (see catalog.py). /sql temp views
+are rebuilt exactly when that cached scan changes.
 """
 
 from __future__ import annotations
 
+import threading
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from polars_express_spark.catalog import DataLake
@@ -32,9 +37,10 @@ class NotFound(KeyError):
 
 
 def _load(lake: DataLake, data_id: str):
-    if not lake.dataset_exists(data_id):
-        raise NotFound(data_id)
-    return lake.load(data_id)
+    try:
+        return lake.load(data_id)
+    except FileNotFoundError:
+        raise NotFound(data_id) from None
 
 
 def get_data_preview(lake: DataLake, data_id: str, limit: int = 100) -> list[dict]:
@@ -145,6 +151,12 @@ def run_regression(lake: DataLake, data_id: str, x_col: str, y_col: str) -> Regr
 import re as _re
 
 _SQL_IDENT = _re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+# view name -> the DataFrame its session temp view was built from (views
+# are session-global, so this is too: a second lake's scan under the
+# same id is a different object and re-registers). The lock keeps the
+# view and its entry in step when handler threads register concurrently.
+_SQL_VIEWS: dict[str, DataFrame] = {}
+_SQL_VIEWS_LOCK = threading.Lock()
 # Mutating / side-effecting PLAN NODE CLASS names a parsed tree must not
 # contain. Spark's grammar allows CTE-prefixed DML ("WITH t AS (...)
 # INSERT ..."), so a first-token SELECT/WITH check alone is bypassable —
@@ -288,10 +300,10 @@ def _check_read_only(plan, allowed_views: set[str]) -> None:
 def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     """Ad-hoc SQL over the lake (engine-native surface beyond the
     reference's three routes): every dataset whose id is a valid SQL
-    identifier is registered as a temp view (once per lake instance),
-    the query runs through Catalyst, and rows come back through the
-    capped JSON sink (same driver-materialization bound as every other
-    endpoint).
+    identifier is registered as a temp view (re-registered whenever
+    DataLake.load hands back a new scan), the query runs through
+    Catalyst, and rows come back through the capped JSON sink (same
+    driver-materialization bound as every other endpoint).
 
     Read-only AND lake-scoped by construction, enforced BEFORE
     execution: a first-token SELECT/WITH + single-statement check
@@ -308,24 +320,25 @@ def run_sql(lake: DataLake, query: str, limit: int | None = None) -> list[dict]:
     if not q or q.split(None, 1)[0].upper() not in ("SELECT", "WITH"):
         raise BadRequest("only SELECT/WITH queries are accepted")
     spark = lake.spark
-    registered = getattr(lake, "_sql_registered", None)
-    if registered is None:
-        registered = lake._sql_registered = set()
+    registered = set()
     for data_id in lake.list_datasets():
-        # once per (lake, dataset): views are lazy plans over the path,
-        # so data overwrites are seen automatically; catalog.save()
-        # discards the entry so a schema change re-registers too
-        if data_id not in registered and _SQL_IDENT.match(data_id):
-            try:
-                lake.load(data_id).createOrReplaceTempView(data_id)
-            except Exception:  # noqa: BLE001
-                # a dataset MID-OVERWRITE by a concurrent writer can be
-                # momentarily unloadable (schema inference over a
-                # half-written dir) — skip it; it re-registers on the
-                # next request, and a query naming it now gets a clean
-                # analysis-error 400 instead of a crashed handler
-                continue
-            registered.add(data_id)
+        if not _SQL_IDENT.match(data_id):
+            continue
+        try:
+            df = lake.load(data_id)
+        except Exception:  # noqa: BLE001
+            # a dataset MID-OVERWRITE by a concurrent writer can be
+            # momentarily unloadable (gone in the publish gap, schema
+            # inference over a half-written dir) — leave it out; a query
+            # naming it now gets a clean 400 instead of a crashed handler
+            continue
+        # a view pins its scan's file listing and schema, so rebuild it
+        # exactly when the lake's cached scan changed
+        with _SQL_VIEWS_LOCK:
+            if _SQL_VIEWS.get(data_id) is not df:
+                df.createOrReplaceTempView(data_id)
+                _SQL_VIEWS[data_id] = df
+        registered.add(data_id)
     try:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(q)
     except Exception as e:

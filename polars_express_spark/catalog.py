@@ -1,8 +1,8 @@
 """DataLake — the id → path catalog.
 
 Reference semantics (src/main.rs:17-57): a directory-of-files catalog
-where one logical dataset id maps to one file; stateless load per query.
-Here generalized Spark-first:
+where one logical dataset id maps to one file, re-parsed on every
+request. Here generalized Spark-first:
 
 - Parquet is the primary at-rest format (columnar, pushdown-friendly);
   CSV/JSON kept for reference-compat (the reference serves CSVs only,
@@ -12,11 +12,22 @@ Here generalized Spark-first:
   per request (src/main.rs:44-52), which defeats pushdown (SURVEY.md §4.3).
 - At 100 TB an id maps to a partitioned parquet directory; the API is
   identical because spark.read.parquet takes files or directories.
+- Resolved scans are MEMOIZED per lake, keyed on (resolved path,
+  declared schema, merge_schema), so repeated requests skip CSV schema
+  inference and file listing. An entry is served only while the path's
+  filesystem stamp is unchanged: (inode, mtime_ns, size) for a file;
+  the directory inode plus (relative path, mtime_ns, size) of every file
+  under it for a directory. Publish-by-rename, appends, added or removed
+  part files and hand-replaced files all change the stamp; every write
+  through the lake (save, compact, restore, save_bucketed, the streaming
+  sink) also clears the cache via `_invalidate_memos`.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,6 +66,9 @@ class DataLake:
         self.spark = spark
         self.base_dir = base_dir
         self.keep_snapshots = keep_snapshots
+        # (path, schema, merge_schema) -> (stamp, DataFrame); see _scan
+        self._scans: dict[tuple, tuple] = {}
+        self._scans_lock = threading.Lock()
 
     def dataset_path(self, data_id: str) -> str | None:
         """Resolve id to an existing file/dir, trying formats in order.
@@ -114,25 +128,50 @@ class DataLake:
         EVOLUTION: parts appended after a column was added still read as
         one frame, old parts null-extended) — off by default because it
         reads every footer up front, which matters at 100 TB file counts.
+        Repeated loads return the same cached scan until the dataset's
+        files change (see _scan).
         """
         path = self.dataset_path(data_id)
         if path is None:
             raise FileNotFoundError(f"dataset not found: {data_id!r} under {self.base_dir}")
-        if path.endswith(".csv"):
-            reader = self.spark.read.option("header", True)
-            if schema is not None:
-                reader = reader.schema(schema)
-            else:
+        return self._scan(path, schema, merge_schema)
+
+    def _scan(self, path: str, schema=None, merge_schema: bool = False) -> DataFrame:
+        """The memoized scan of ``path``: rebuilt only when its stamp
+        changed. The stamp is taken BEFORE the read, so a write racing
+        the read can only leave an entry that misses next time, never a
+        stale one that hits. Two concurrent first misses may both build;
+        the later insert wins."""
+        schema_key = schema if schema is None or isinstance(schema, str) else schema.json()
+        key = (path, schema_key, merge_schema)
+        stamp = _stamp(path)
+        with self._scans_lock:
+            hit = self._scans.get(key)
+        if hit is not None and hit[0] == stamp:
+            return hit[1]
+        df = self._read(path, schema, merge_schema)
+        with self._scans_lock:
+            for k in [k for k in self._scans if not os.path.exists(k[0])]:
+                del self._scans[k]  # dataset gone: keep one entry per live path
+            self._scans[key] = (stamp, df)
+        return df
+
+    def _read(self, path: str, schema=None, merge_schema: bool = False) -> DataFrame:
+        """Format dispatch on the path's extension (a snapshot's is the
+        one before SNAP_MARK; a bare directory reads as parquet)."""
+        fmt = os.path.basename(path).split(self.SNAP_MARK)[0].rpartition(".")[2]
+        reader = self.spark.read
+        if fmt in ("csv", "json") and schema is not None:
+            reader = reader.schema(schema)
+        if fmt == "csv":
+            reader = reader.option("header", True)
+            if schema is None:
                 reader = reader.option("inferSchema", True)
             return reader.csv(path)
-        if path.endswith(".json"):
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
+        if fmt == "json":
             return reader.json(path)
-        if path.endswith(".orc"):
-            return self.spark.read.orc(path)
-        reader = self.spark.read
+        if fmt == "orc":
+            return reader.orc(path)
         if merge_schema:
             reader = reader.option("mergeSchema", True)
         return reader.parquet(path)
@@ -346,17 +385,7 @@ class DataLake:
             raise FileNotFoundError(
                 f"no snapshot {version} of {data_id!r}; have {sorted(snaps)}"
             )
-        path = snaps[version]
-        fmt = path.split(self.SNAP_MARK)[0].rpartition(".")[2]
-        if fmt == "csv":
-            return self.spark.read.option("header", True).option(
-                "inferSchema", True
-            ).csv(path)
-        if fmt == "json":
-            return self.spark.read.json(path)
-        if fmt == "orc":
-            return self.spark.read.orc(path)
-        return self.spark.read.parquet(path)
+        return self._scan(snaps[version])
 
     def restore(self, data_id: str, version: int) -> str:
         """Rollback: republish snapshot ``version`` as the live dataset
@@ -392,7 +421,7 @@ class DataLake:
         return path
 
     def _invalidate_memos(self) -> None:
-        """Drop memoized intermediate frames derived from this lake dir.
+        """Drop memoized scans and intermediate frames of this lake dir.
 
         A dataset overwrite changes the data under every memo keyed on
         this directory (shingle tables, pair frames, ANN indexes); in a
@@ -403,9 +432,8 @@ class DataLake:
         from polars_express_spark.queries._memo import FRAMES
 
         FRAMES.release(self.base_dir)
-        # the /sql temp-view registry caches one registration per
-        # dataset; a write may change the schema, so force re-register
-        getattr(self, "_sql_registered", set()).clear()
+        with self._scans_lock:
+            self._scans.clear()
 
     def save_bucketed(
         self,
@@ -438,6 +466,28 @@ class DataLake:
         )
         self._invalidate_memos()
         return path
+
+
+def _stamp(path: str) -> tuple:
+    """Cheap change detector for a dataset path: (inode, mtime_ns, size)
+    of a file; for a directory its inode plus (relative path, mtime_ns,
+    size) of every file beneath it. Raises FileNotFoundError when the
+    path, or a file under it, vanishes mid-walk (a concurrent overwrite),
+    like a load of a missing dataset."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    files = []
+    dirs = [path]
+    while dirs:
+        with os.scandir(dirs.pop()) as it:
+            for e in it:
+                if e.is_dir(follow_symlinks=False):
+                    dirs.append(e.path)
+                else:
+                    fs = e.stat()
+                    files.append((os.path.relpath(e.path, path), fs.st_mtime_ns, fs.st_size))
+    return (st.st_ino, tuple(sorted(files)))
 
 
 # Timestamp columns that must be normalized to session-tz TIMESTAMP.

@@ -36,8 +36,9 @@ whole tables) needs to detect the cap.
 
 Error mapping: BadRequest → 400 like the reference; unknown dataset →
 404 (the reference surfaces its load failure as a 500, src/main.rs:114 —
-404 is the deliberate, documented improvement since DataLake can check
-existence cheaply); malformed JSON → 400.
+404 is the deliberate, documented improvement: DataLake.load raises
+FileNotFoundError before any Spark work, also for a dataset deleted
+mid-request); malformed JSON → 400.
 """
 
 from __future__ import annotations

@@ -238,3 +238,71 @@ def test_snapshot_default_off_keeps_r9_behavior(spark, tmp_path):
     assert lake.list_snapshots("ds") == []
     assert not [e for e in os.listdir(tmp_path) if DataLake.SNAP_MARK in e]
     assert lake.load("ds").count() == 7
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs fn started) via a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_cache_hit_starts_no_job(spark, lake, tmp_path):
+    """A repeated load of an unchanged CSV reuses the scan: the schema
+    inference job runs on the first load only."""
+    (tmp_path / "t.csv").write_text("a,b\n1,2\n3,4\n")
+    first, n_first = _jobs_in(spark, "scan_cache_miss", lambda: lake.load("t"))
+    again, n_again = _jobs_in(spark, "scan_cache_hit", lambda: lake.load("t"))
+    assert n_first > 0  # inferSchema reads the file
+    assert again is first and n_again == 0
+    # a declared schema is its own entry
+    assert lake.load("t", schema="a int, b int") is not first
+
+
+def test_load_cache_sees_every_change(spark, lake, tmp_path):
+    """Writes through the lake, hand edits and deletions all miss the
+    cache on the next load."""
+    import shutil
+
+    # save() overwrite
+    lake.save(spark.range(10).toDF("id"), "ow")
+    df = lake.load("ow")
+    lake.save(spark.range(25).toDF("id"), "ow")
+    assert lake.load("ow") is not df and lake.load("ow").count() == 25
+
+    # external same-size rewrite of a single file, mtime bumped
+    csv = tmp_path / "c.csv"
+    csv.write_text("a,b\n1,2\n")
+    assert [tuple(r) for r in lake.load("c").collect()] == [(1, 2)]
+    csv.write_text("a,b\n3,4\n")
+    st = os.stat(csv)
+    os.utime(csv, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert [tuple(r) for r in lake.load("c").collect()] == [(3, 4)]
+
+    # a part file appended to a parquet directory
+    lake.save(spark.range(5).toDF("id"), "ap")
+    assert lake.load("ap").count() == 5
+    spark.range(5, 8).toDF("id").write.mode("append").parquet(lake.dataset_path("ap"))
+    assert lake.load("ap").count() == 8
+
+    # deletion: not served from the cache, and its entry is dropped on
+    # the next miss
+    gone = lake.dataset_path("ap")
+    shutil.rmtree(gone)
+    with pytest.raises(FileNotFoundError):
+        lake.load("ap")
+    csv.write_text("a,b\n5,6\n7,8\n")
+    lake.load("c")
+    assert not [k for k in lake._scans if k[0] == gone]
+
+
+def test_load_cache_cleared_by_lake_writes(spark, lake):
+    """Every write through the lake drops the cached scans."""
+    lake.save(spark.range(3).toDF("id"), "w")
+    df = lake.load("w")
+    lake._invalidate_memos()
+    assert lake.load("w") is not df

@@ -351,3 +351,28 @@ def test_concurrent_requests_during_overwrite(spark, tmp_path):
     status, body = _post_any(f"{base}/sql", {"query": "SELECT count(*) AS n FROM metrics"})
     assert status == 200 and body == [{"n": sizes[-1]}]
     srv.shutdown()
+
+
+def test_sql_sees_hand_replaced_csv(spark, tmp_path):
+    """A CSV replaced outside the lake's writers (columns reordered) is
+    seen by the next /sql: the view is rebuilt because the file's stamp
+    changed, so columns are matched by the new header, not by position
+    under the old inferred schema."""
+    import os
+
+    d = tmp_path / "swap_lake"
+    d.mkdir()
+    csv = d / "swap.csv"
+    csv.write_text("a,b\n1,2\n")
+    srv = make_server(DataLake(spark, str(d)), host="127.0.0.1", port=0)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{srv.server_address[1]}/sql"
+    try:
+        q = {"query": "SELECT a, b FROM swap"}
+        assert _post_any(url, q) == (200, [{"a": 1, "b": 2}])
+        csv.write_text("b,a\n20,10\n")
+        st = os.stat(csv)
+        os.utime(csv, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        assert _post_any(url, q) == (200, [{"a": 10, "b": 20}])
+    finally:
+        srv.shutdown()
